@@ -67,11 +67,13 @@ def allocate_sequential(
     amortizes Arrow/pandas per-group overhead across thousands of keys
     per batch and keeps the task count equal to the shuffle width rather
     than the key count — the difference between ~20k tiny pandas frames
-    and 32 streaming passes at sf0.1, and between 10^9 groups and a few
-    thousand tasks at 100 TB. State (remaining stock per key) carries
-    across Arrow batches within a partition; that is safe because the
-    repartition puts every row of a key in exactly one partition and the
-    partition sort makes batch order the global per-key order.
+    and the few streaming passes AQE sizes the shuffle to at sf0.1, and
+    between 10^9 groups and a few thousand tasks at 100 TB. State
+    (remaining stock per key) carries across Arrow batches within a
+    partition; that is safe because the repartition puts every row of a
+    key in exactly one partition (AQE coalescing merges whole hash
+    partitions, never splits one) and the partition sort makes batch
+    order the global per-key order.
 
     ``input_partitioned=True`` skips the repartition: pass it when the
     input's physical layout ALREADY co-locates every key in one

@@ -402,7 +402,14 @@ class CandyPipeline:
     def save_outputs(self) -> dict[str, str]:
         """S8 — one action per output (vs the reference's repeated
         show()/count() jobs in the load path, SURVEY §4.2). The spine is
-        cached so the four derived tables don't recompute allocation."""
+        cached so the four derived tables don't recompute allocation.
+
+        The cached spine's width is AQE's choice, not
+        ``spark.sql.shuffle.partitions``: the session sets
+        ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` so
+        AQE coalesces the allocation's last shuffle by its size, and the
+        allocation and every stage that reads the cache run that many
+        tasks."""
         lines = self.allocated_lines().cache()
         try:
             orders = self.order_aggregates(lines)

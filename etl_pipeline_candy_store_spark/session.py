@@ -15,7 +15,7 @@ import os
 from pyspark.sql import SparkSession
 
 #: Defaults chosen for scale:
-#: - AQE coalesces the 200-default shuffle partitions down to what the data
+#: - AQE coalesces the 32 shuffle partitions set below down to what the data
 #:   actually needs, and splits skewed partitions at join time.
 #: - ``shuffle.partitions`` is only the *initial* number under AQE; at 100 TB
 #:   you would raise it (rule of thumb: total shuffle bytes / 128 MiB) — AQE
@@ -33,6 +33,11 @@ _SCALE_CONF = {
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.shuffle.partitions": "32",
+    # let AQE coalesce a cached plan's last shuffle too: each Python task
+    # costs ~0.25 CPU-s however small (pyspark's worker re-scans
+    # pyspark.zip in importlib.invalidate_caches() per task), so a cached
+    # spine kept at 32 partitions paid that 32 times per consumer stage
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

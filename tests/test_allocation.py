@@ -31,16 +31,36 @@ def _random_requests(seed: int, n: int = 400, n_keys: int = 6):
     ]
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3])
-def test_matches_python_oracle(spark, seed):
-    rows = _random_requests(seed)
+@pytest.mark.parametrize(
+    "seed, n_keys, cached",
+    [
+        pytest.param(1, 6, False, id="1"),
+        pytest.param(2, 6, False, id="2"),
+        pytest.param(3, 6, False, id="3"),
+        # a cached result is coalesced by AQE: many keys from several
+        # hash partitions share one task and its remaining-stock state
+        pytest.param(4, 200, True, id="cached-coalesced"),
+    ],
+)
+def test_matches_python_oracle(spark, seed, n_keys, cached):
+    rows = _random_requests(seed, n=2000 if cached else 400, n_keys=n_keys)
     df = spark.createDataFrame(rows, "key int, seq int, qty int, stock int")
-    got = {
-        (r["key"], r["seq"]): (r["quantity"], r["cancelled"], r["stock_after"])
-        for r in allocate_sequential(
-            df, key_col="key", seq_cols=["seq"], qty_col="qty", stock_col="stock"
-        ).collect()
-    }
+    out = allocate_sequential(
+        df, key_col="key", seq_cols=["seq"], qty_col="qty", stock_col="stock"
+    )
+    if cached:
+        out = out.cache()
+        out.count()
+        width = out.rdd.getNumPartitions()
+        shuffle_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert width < shuffle_width, "AQE did not coalesce the cached plan"
+    try:
+        got = {
+            (r["key"], r["seq"]): (r["quantity"], r["cancelled"], r["stock_after"])
+            for r in out.collect()
+        }
+    finally:
+        out.unpersist()
     want = {
         (r["key"], r["seq"]): (r["quantity"], r["cancelled"], r["stock_after"])
         for r in allocate_python_oracle(rows, key="key", seq=["seq"], qty="qty", stock="stock")

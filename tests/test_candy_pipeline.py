@@ -192,6 +192,38 @@ def test_save_outputs_single_files(pipeline):
     assert ids == sorted(ids)
 
 
+def test_save_outputs_spine_width(spark, pipeline):
+    """The cached spine is sized by AQE, not by
+    ``spark.sql.shuffle.partitions``: the allocation's MapInPandas and
+    every stage that reads the cache run at most defaultParallelism
+    tasks, because each Python task has a fixed cost."""
+    sc = spark.sparkContext
+    group = "save-outputs-width"
+    sc.setJobGroup(group, "spine width")
+    try:
+        pipeline.save_outputs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+    widths = []
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            if str(store.lastStageAttempt(sid).status()) != "COMPLETE":
+                continue
+            todo = [store.operationGraphForStage(sid).rootCluster()]
+            while todo:
+                cluster = todo.pop()
+                if cluster.name().startswith("MapInPandas"):
+                    widths.append(tracker.getStageInfo(sid).numTasks)
+                    break
+                kids = cluster.childClusters()
+                todo.extend(kids.apply(i) for i in range(kids.size()))
+    assert widths, "no MapInPandas stage ran"
+    assert max(widths) <= sc.defaultParallelism, widths
+
+
 def test_forecast_deterministic(pipeline):
     a = pipeline.forecast().collect()
     b = pipeline.forecast().collect()
