@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_candy_store_spark.operators.asof import asof_join, sessionize
+from etl_pipeline_candy_store_spark.operators.ledger import local_frame
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
 
 
@@ -112,7 +113,8 @@ GROUP BY b.bin_id
 )
 def q35_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    bins = spark.createDataFrame(
+    bins = local_frame(
+        spark,
         [(0, 0.0, 50.0), (1, 50.0, 100.0), (2, 100.0, 150.0), (3, 150.0, 1e9)],
         "bin_id int, lo double, hi double",
     )

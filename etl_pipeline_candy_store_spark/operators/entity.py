@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_candy_store_spark.operators.dedup import connected_components
+from etl_pipeline_candy_store_spark.operators.ledger import local_frame
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
 
 _ER_V1_OFFSET = 1_000_000
@@ -1187,6 +1188,7 @@ def q220_fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["iter", "n_cand", "n_match", "threshold"] + [
         c for k in _FS_ATTRS for c in (f"wa_{k}", f"wd_{k}")
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(t[c] for c in cols) for t in traj], _FS_TRAJ_SCHEMA
     )

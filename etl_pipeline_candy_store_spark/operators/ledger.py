@@ -52,6 +52,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 
 # --- filesystem primitives (Hadoop FS so the same code runs against
@@ -61,8 +62,31 @@ from pyspark.sql import functions as F
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
+    # resolve through hadoop Path, not java.net.URI: raw URI.create
+    # rejects legal filesystem characters (spaces — e.g. hive partition
+    # values like "pri=4-NOT SPECIFIED"), which Path escapes itself
     fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     return jvm, fs
+
+
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A frame of the literal ``rows`` with exactly the ``ddl`` schema,
+    built in the JVM (one partition, one literal array)."""
+    # not spark.createDataFrame(<list>): that plans a PythonRDD, so every
+    # action on even a one-row frame starts Python tasks (~0.2 CPU-s each)
+    schema = StructType.fromDDL(ddl)
+    structs = [
+        F.struct(
+            *[
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(row, schema.fields)
+            ]
+        )
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(ArrayType(schema)))
+    )
 
 
 def fs_exists(spark: SparkSession, path: str) -> bool:
@@ -103,7 +127,7 @@ def read_run_state(
     (crashed) partitions at the scan."""
     path = f"{state_dir}/{kind}"
     if not runs or not fs_exists(spark, path):
-        empty = spark.createDataFrame([], f"{part_col} int, {schema}")
+        empty = local_frame(spark, [], f"{part_col} int, {schema}")
         return empty if keep_part else empty.drop(part_col)
     df = spark.read.parquet(path).filter(F.col(part_col).isin(runs))
     return df if keep_part else df.drop(part_col)
@@ -124,7 +148,7 @@ def commit_run(
         df.write.mode("overwrite").parquet(
             f"{state_dir}/{kind}/{part_col}={run}"
         )
-    spark.createDataFrame([(run,)], "n bigint").write.mode(
+    local_frame(spark, [(run,)], "n bigint").write.mode(
         "overwrite"
     ).parquet(f"{state_dir}/applied/{part_col}={run}")
 
@@ -153,7 +177,7 @@ def swap_applied(
     delete the superseded partitions. A reader pinned to the old runs
     keeps a consistent view until its scan ends; a crash between the
     delete and the rename is repaired by :func:`repair_applied`."""
-    spark.createDataFrame([(new_run,)], "n bigint").write.mode(
+    local_frame(spark, [(new_run,)], "n bigint").write.mode(
         "overwrite"
     ).parquet(f"{state_dir}/applied.next/{part_col}={new_run}")
     jvm, fs = _hadoop_fs(spark, state_dir)
@@ -181,7 +205,7 @@ def read_batch_state(
     stream checkpoint itself: every batch OVERWRITES its own partition,
     so redelivery rewrites deterministic content."""
     if not fs_exists(spark, path):
-        return spark.createDataFrame([], f"batch bigint, {schema}")
+        return local_frame(spark, [], f"batch bigint, {schema}")
     df = spark.read.parquet(path)
     if before_batch is not None:
         df = df.filter(F.col("batch") < before_batch)
@@ -253,6 +277,9 @@ def staged_compact(
 # --- in-target max-applied ledger (the non-idempotent-sink protocol) ----
 
 LEDGER_NAME = "_applied"
+#: the schema every max-applied ledger is written with; reading with it
+#: skips the parquet footer-inference job
+_LEDGER_SCHEMA = "batch_id long"
 
 
 def read_max_applied(
@@ -272,7 +299,9 @@ def read_max_applied(
     return max(
         (
             r["batch_id"]
-            for r in spark.read.parquet(target + "/" + ledger_name).collect()
+            for r in spark.read.schema(_LEDGER_SCHEMA)
+            .parquet(target + "/" + ledger_name)
+            .collect()
         ),
         default=-1,
     )
@@ -284,6 +313,6 @@ def write_applied_into(
     """Stamp the ledger INSIDE a not-yet-swapped target version, so the
     data and the fact of its application become visible in the same
     atomic rename."""
-    spark.createDataFrame([(int(batch_id),)], "batch_id long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(tmp + "/" + ledger_name)
+    local_frame(spark, [(int(batch_id),)], _LEDGER_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(tmp + "/" + ledger_name)

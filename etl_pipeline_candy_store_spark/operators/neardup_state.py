@@ -116,6 +116,7 @@ from etl_pipeline_candy_store_spark.operators.ledger import (  # noqa: E402
 )
 from etl_pipeline_candy_store_spark.operators.ledger import (  # noqa: E402
     committed_runs,
+    local_frame,
     repair_applied,
     swap_applied,
 )
@@ -185,7 +186,7 @@ def _read_postings(
                 )
             )
     if not parts:
-        return spark.createDataFrame([], f"run int, {_ND_POSTINGS_SCHEMA}")
+        return local_frame(spark, [], f"run int, {_ND_POSTINGS_SCHEMA}")
     from functools import reduce
 
     return reduce(DataFrame.unionByName, parts)
@@ -262,7 +263,7 @@ def neardup_pairs_incremental(
         F.count(F.lit(1)).cast("long").alias("n")
     )
 
-    empty_pairs = spark.createDataFrame([], _ND_PAIRS_SCHEMA).select(
+    empty_pairs = local_frame(spark, [], _ND_PAIRS_SCHEMA).select(
         "doc_a", "doc_b", "n_common", "n_union"
     )
     if runs:

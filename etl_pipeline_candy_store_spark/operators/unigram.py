@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.operators.ledger import local_frame
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
 
 _MAXW = 16  # words longer are excluded from training AND encoding
@@ -950,7 +951,8 @@ def q219_unigram_train_trajectory(
     _, traj = unigram_train(
         load(spark, sf_dir, "documents"), exact_iters=3
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 t["iter"],

@@ -38,6 +38,12 @@ _SCALE_CONF = {
     # pyspark.zip in importlib.invalidate_caches() per task), so a cached
     # spine kept at 32 partitions paid that 32 times per consumer stage
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # static: Spark's LRU cache of compiled generated classes holds 100 by
+    # default, but one CandyPipeline.save_outputs() pass needs 107 distinct
+    # classes and three winnow-sink micro-batches plus the pair read 117,
+    # so each pass evicted its own classes and recompiled (and re-JITted)
+    # them the next time; 1000 leaves headroom over those working sets
+    "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from etl_pipeline_candy_store_spark.operators.ledger import local_frame
+
 ALLOC_STREAM_OUTPUT = StructType(
     [
         StructField("product_id", IntegerType(), False),
@@ -509,7 +511,7 @@ def histogram_quantiles(
     cum = cells.select(
         "date", "bin", "cnt", F.sum("cnt").over(w_cum).alias("cum")
     ).withColumn("n", F.sum("cnt").over(Window.partitionBy("date")))
-    p = cells.sparkSession.createDataFrame([(x,) for x in pcts], "p int")
+    p = local_frame(cells.sparkSession, [(x,) for x in pcts], "p int")
     hit = (
         cum.crossJoin(F.broadcast(p))
         .filter(F.col("cum") * 100 >= F.col("n") * F.col("p"))

@@ -23,11 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.operators.ledger import (
+    _hadoop_fs,
+    read_max_applied,
+    write_applied_into,
+)
 from etl_pipeline_candy_store_spark.operators.sweepline import interval_deltas
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     _fs_recover,
     _fs_swap,
-    _hadoop_fs,
 )
 
 _LEDGER = "_applied"
@@ -59,22 +63,9 @@ def stream_interval_deltas(
         )
         # only the MAX applied batch_id is stored: batch ids are
         # monotonic and only recent batches redeliver, so `<= max` is
-        # the replay test and ledger I/O stays O(1) per batch (a legacy
-        # multi-row ledger reads as the max of its rows)
-        applied_max = -1
+        # the replay test and ledger I/O stays O(1) per batch
+        applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
         if fs.exists(P(target)):
-            if fs.exists(P(target + "/" + _LEDGER)):
-                # default=-1: a zero-row ledger (crash between swap
-                # steps) means "nothing applied" — recover, don't wedge
-                applied_max = max(
-                    (
-                        r["batch_id"]
-                        for r in spark.read.parquet(
-                            target + "/" + _LEDGER
-                        ).collect()
-                    ),
-                    default=-1,
-                )
             if batch_id <= applied_max:
                 return  # replayed delivery — already merged, skip
             merged = (
@@ -87,10 +78,7 @@ def stream_interval_deltas(
             merged = partials
         tmp = target + f"._tmp-{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
-        ledger = spark.createDataFrame(
-            [(int(batch_id),)], "batch_id long"
-        )
-        ledger.coalesce(1).write.mode("overwrite").parquet(tmp + "/" + _LEDGER)
+        write_applied_into(spark, tmp, batch_id, _LEDGER)
         _fs_swap(spark, tmp, target)
 
     return (

@@ -40,6 +40,7 @@ from etl_pipeline_candy_store_spark.operators.curation import (
     quality_gate,
 )
 from etl_pipeline_candy_store_spark.operators.dedup import _shingles
+from etl_pipeline_candy_store_spark.operators.ledger import local_frame
 
 
 def eval_shingle_set(eval_docs: DataFrame) -> DataFrame:
@@ -110,7 +111,7 @@ def read_curated_docs(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(out_dir).drop("batch")
     except AnalysisException:
-        return spark.createDataFrame([], "doc_id bigint, text string")
+        return local_frame(spark, [], "doc_id bigint, text string")
 
 
 # --- Streaming exact dedup (digest-state probing) ---------------------
@@ -164,7 +165,7 @@ def _read_digest_state(
             .drop("batch")
         )
     except AnalysisException:
-        return spark.createDataFrame([], "_fp string, doc_id bigint")
+        return local_frame(spark, [], "_fp string, doc_id bigint")
 
 
 def stream_exact_dedup(doc_stream: DataFrame, state_dir: str):
@@ -183,7 +184,7 @@ def read_deduped_docs(spark: SparkSession, state_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(f"{state_dir}/docs").drop("batch")
     except AnalysisException:
-        return spark.createDataFrame([], "doc_id bigint, text string")
+        return local_frame(spark, [], "doc_id bigint, text string")
 
 
 # --- Streaming token-budget admission (the q141 quota, on arrival) ----
@@ -221,7 +222,7 @@ def apply_token_budget_batch(
             .agg(F.sum("arrived").alias("_spent"))
         )
     except AnalysisException:
-        spent = spark.createDataFrame([], "source string, _spent bigint")
+        spent = local_frame(spark, [], "source string, _spent bigint")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -256,8 +257,8 @@ def read_admitted_docs(spark: SparkSession, state_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(f"{state_dir}/docs").drop("batch")
     except AnalysisException:
-        return spark.createDataFrame(
-            [], "doc_id bigint, text string, source string"
+        return local_frame(
+            spark, [], "doc_id bigint, text string, source string"
         )
 
 
@@ -435,8 +436,8 @@ def read_semantic_flags(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(f"{out_dir}/flagged").drop("batch")
     except AnalysisException:
-        return spark.createDataFrame(
-            [], "vec_id bigint, n_eval_hits bigint, max_cos_micros bigint"
+        return local_frame(
+            spark, [], "vec_id bigint, n_eval_hits bigint, max_cos_micros bigint"
         )
 
 
@@ -485,8 +486,8 @@ def read_importance_scores(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(out_dir).drop("batch")
     except AnalysisException:
-        return spark.createDataFrame(
-            [], "doc_id bigint, n_toks bigint, log2_weight bigint"
+        return local_frame(
+            spark, [], "doc_id bigint, n_toks bigint, log2_weight bigint"
         )
 
 # --- Streaming duplicated-span scrub (q203's ingest twin) --------------
@@ -577,7 +578,7 @@ def _read_shingle_state(
             .drop("batch")
         )
     except AnalysisException:
-        return spark.createDataFrame([], "shingle string, doc_id bigint")
+        return local_frame(spark, [], "shingle string, doc_id bigint")
 
 
 def stream_span_scrub(doc_stream: DataFrame, state_dir: str):
@@ -596,7 +597,8 @@ def read_scrubbed_docs(spark: SparkSession, state_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(f"{state_dir}/docs").drop("batch")
     except AnalysisException:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "doc_id bigint, n_tokens bigint, n_removed bigint,"
             " clean_text string",
@@ -658,7 +660,8 @@ def read_unigram_encodings(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(out_dir).drop("batch")
     except AnalysisException:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "doc_id bigint, n_words bigint, n_pieces bigint,"
             " ll_bits bigint, n_oov bigint",

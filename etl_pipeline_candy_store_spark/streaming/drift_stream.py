@@ -33,10 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     _fs_recover,
     _fs_swap,
-    _hadoop_fs,
 )
 
 _LEDGER = "_applied"

@@ -32,10 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.operators.ledger import (
+    _hadoop_fs,
+    local_frame,
+    read_max_applied,
+    write_applied_into,
+)
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     _fs_recover,
     _fs_swap,
-    _hadoop_fs,
 )
 
 _LEDGER = "_applied"
@@ -68,19 +73,8 @@ def apply_forget_batch(
     # batches redeliver, so `batch_id <= max` IS the replay test — a
     # full id history would make per-batch ledger I/O grow with stream
     # age on exactly the long-running streams this sink exists for
-    # (reads of a legacy multi-row ledger still work: max of its rows)
-    applied_max = -1
+    applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
     if fs.exists(P(target)):
-        if fs.exists(P(target + "/" + _LEDGER)):
-            # default=-1: a zero-row ledger (crash between swap steps)
-            # means "nothing applied" — must recover, not wedge the stream
-            applied_max = max(
-                (
-                    r["batch_id"]
-                    for r in spark.read.parquet(target + "/" + _LEDGER).collect()
-                ),
-                default=-1,
-            )
         if batch_id <= applied_max:
             return  # replayed delivery — already merged, skip
         merged = (
@@ -92,8 +86,7 @@ def apply_forget_batch(
         merged = batch_digests
     tmp = target + f"._tmp-{batch_id}"
     merged.write.mode("overwrite").parquet(tmp)
-    ledger = spark.createDataFrame([(int(batch_id),)], "batch_id long")
-    ledger.coalesce(1).write.mode("overwrite").parquet(tmp + "/" + _LEDGER)
+    write_applied_into(spark, tmp, batch_id, _LEDGER)
     _fs_swap(spark, tmp, target)
 
 
@@ -118,7 +111,7 @@ def read_tombstones(spark: SparkSession, state_path: str) -> DataFrame:
     P = jvm.org.apache.hadoop.fs.Path
     _fs_recover(spark, state_path)
     if not fs.exists(P(state_path.rstrip("/"))):
-        return spark.createDataFrame([], "digest string")
+        return local_frame(spark, [], "digest string")
     return spark.read.parquet(state_path.rstrip("/")).select("digest")
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs, local_frame
 from etl_pipeline_candy_store_spark.operators.merge import merge_upsert
 
 
@@ -39,9 +40,11 @@ from etl_pipeline_candy_store_spark.operators.merge import merge_upsert
 #: micro-batch — the sink would treat it as first-seen and re-ingest the
 #: forgotten content. Each purging twin therefore records the purged
 #: ids here, the sink's new-doc filter anti-joins them, and every
-#: applied batch carries the relation through the atomic swap. The
-#: tombstone stores only the opaque doc_id (no content, no derived
-#: digests), the standard durable-deletion marker.
+#: applied batch carries the relation through the atomic swap once a
+#: purge has created it (until then its absence is the empty set, which
+#: the winnow sink neither joins nor writes). The tombstone stores only
+#: the opaque doc_id (no content, no derived digests), the standard
+#: durable-deletion marker.
 TOMBSTONES = "_purged_docs"
 
 
@@ -52,17 +55,7 @@ def read_ids_or_empty(spark, path: str, col: str = "doc_id") -> DataFrame:
     jvm, fs = _hadoop_fs(spark, path)
     if fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
         return spark.read.parquet(path)
-    return spark.createDataFrame([], f"{col} long")
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    # resolve through hadoop Path, not java.net.URI: raw URI.create
-    # rejects legal filesystem characters (spaces — e.g. hive partition
-    # values like "pri=4-NOT SPECIFIED"), which Path escapes itself
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    return jvm, fs
+    return local_frame(spark, [], f"{col} long")
 
 
 def _fs_swap(spark, tmp: str, target: str) -> None:

@@ -35,6 +35,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from etl_pipeline_candy_store_spark.operators.ledger import (
+    local_frame,
+    read_batch_state,
+)
 from etl_pipeline_candy_store_spark.operators.similarity import (
     _cos_micros,
     _dot,
@@ -44,20 +48,6 @@ from etl_pipeline_candy_store_spark.operators.similarity import (
 
 _PAIRS_SCHEMA = "vec_a bigint, vec_b bigint, bucket int, cos_micros bigint"
 _VECS_SCHEMA = "vec_id bigint, bucket int, embedding array<float>, nrm double"
-
-
-def _read_state(
-    spark: SparkSession, path: str, schema: str, before_batch: int | None = None
-) -> DataFrame:
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return spark.createDataFrame([], f"batch bigint, {schema}")
-    df = spark.read.parquet(path)
-    if before_batch is not None:
-        df = df.filter(F.col("batch") < before_batch)
-    return df
 
 
 def apply_vector_neardup_batch(
@@ -78,7 +68,7 @@ def apply_vector_neardup_batch(
     )
     if not vecs_new.take(1):
         return
-    vecs_old = _read_state(
+    vecs_old = read_batch_state(
         spark, f"{state_dir}/vecs", _VECS_SCHEMA, before_batch=batch_id
     ).drop("batch")
     vecs_all = vecs_old.unionByName(vecs_new)
@@ -128,7 +118,7 @@ def stream_vector_neardup(
 
 def read_vector_neardup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     """The accumulated near-dup pair table the stream has emitted."""
-    return _read_state(spark, f"{state_dir}/pairs", _PAIRS_SCHEMA).drop("batch")
+    return read_batch_state(spark, f"{state_dir}/pairs", _PAIRS_SCHEMA).drop("batch")
 
 
 # --- PQ-code semantic dedup on arrival --------------------------------
@@ -170,7 +160,7 @@ def apply_pq_code_dedup_batch(
             .drop("batch")
         )
     except AnalysisException:
-        seen = spark.createDataFrame([], _CODE_SCHEMA)
+        seen = local_frame(spark, [], _CODE_SCHEMA)
     keep_in_batch = coded.groupBy("code_key").agg(
         F.min("vec_id").alias("vec_id")
     )
@@ -205,6 +195,6 @@ def read_pq_deduped_vectors(spark: SparkSession, state_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(f"{state_dir}/vecs").drop("batch")
     except AnalysisException:
-        return spark.createDataFrame(
-            [], f"{_CODE_SCHEMA}, embedding array<float>"
+        return local_frame(
+            spark, [], f"{_CODE_SCHEMA}, embedding array<float>"
         )

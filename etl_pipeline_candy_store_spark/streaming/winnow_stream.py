@@ -55,15 +55,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     TOMBSTONES,
     _fs_recover,
     _fs_swap,
-    _hadoop_fs,
     read_ids_or_empty,
 )
 
 _LEDGER = "_applied"
+#: the schema the sink writes its fingerprint-frequency rows with
+_COUNTS_SCHEMA = "wmin long, df long"
 #: seen-doc set subdir — underscore-prefixed so parquet readers of the
 #: count state never see it; swaps atomically with the counts
 _SEEN = "_seen_docs"
@@ -120,7 +122,7 @@ def stream_fingerprint_counts(
         P = jvm.org.apache.hadoop.fs.Path
         target = target_path.rstrip("/")
         applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-        tombs = None
+        has_tombs = False
         if fs.exists(P(target)):
             # format check FIRST, even for replayed batches: resuming
             # onto pre-r14 state must fail fast with the migration
@@ -135,18 +137,27 @@ def stream_fingerprint_counts(
             # must not double-count its fingerprints' df. Purged ids
             # are excluded the same way: a redelivery of a forgotten
             # document must not silently re-ingest it (tombstones).
-            seen = spark.read.parquet(target + "/" + _SEEN)
-            tombs = read_ids_or_empty(spark, target + "/" + TOMBSTONES)
+            # The sink's own relations are read with the schema it
+            # wrote them with, which skips parquet's footer-inference job.
+            seen = spark.read.schema(
+                batch.select("doc_id").schema
+            ).parquet(target + "/" + _SEEN)
             new_docs = (
                 batch.select("doc_id")
                 .distinct()
                 .join(seen, "doc_id", "left_anti")
-                .join(tombs, "doc_id", "left_anti")
-                .localCheckpoint(eager=True)
             )
+            # no tombstone set (no purge so far) is the empty set: no
+            # anti-join, and nothing to carry through the swap
+            has_tombs = fs.exists(P(target + "/" + TOMBSTONES))
+            if has_tombs:
+                tombs = spark.read.parquet(target + "/" + TOMBSTONES)
+                new_docs = new_docs.join(tombs, "doc_id", "left_anti")
+            new_docs = new_docs.localCheckpoint(eager=True)
             fresh = batch.join(new_docs, "doc_id", "left_semi")
             merged = (
-                spark.read.parquet(target)
+                spark.read.schema(_COUNTS_SCHEMA)
+                .parquet(target)
                 .unionByName(_batch_fpcounts(fresh))
                 .groupBy("wmin")
                 .agg(F.sum("df").cast("long").alias("df"))
@@ -158,7 +169,7 @@ def stream_fingerprint_counts(
         tmp = target + f"._tmp-{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
         merged_docs.write.mode("overwrite").parquet(tmp + "/" + _SEEN)
-        if tombs is not None:
+        if has_tombs:
             # tombstones survive every merge — the swap replaces the
             # whole target directory, so the relation must be carried
             tombs.write.mode("overwrite").parquet(tmp + "/" + TOMBSTONES)
@@ -192,7 +203,7 @@ def read_winnow_pairs(
         winnow_fingerprints,
     )
 
-    state = spark.read.parquet(target_path.rstrip("/"))
+    state = spark.read.schema(_COUNTS_SCHEMA).parquet(target_path.rstrip("/"))
     band = state.filter(
         F.col("df").between(_WINNOW_DF_MIN, _WINNOW_DF_MAX)
     ).select("wmin")
@@ -262,7 +273,7 @@ def purge_docs(
     target = target_path.rstrip("/")
     _require_seen(fs, P, target)
     applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-    state = spark.read.parquet(target)
+    state = spark.read.schema(_COUNTS_SCHEMA).parquet(target)
     seen = spark.read.parquet(target + "/" + _SEEN)
     victims = docs.select("doc_id", "text").join(
         seen, "doc_id", "left_semi"

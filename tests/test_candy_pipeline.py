@@ -401,3 +401,15 @@ def test_allocation_strategy_forced_and_invalid(spark, fixture_dir, pipeline):
     bad = CandyConfig(**base, allocation_strategy="nope")
     with pytest.raises(ValueError, match="allocation_strategy"):
         CandyPipeline(spark, bad).allocated_lines()
+
+
+def test_save_outputs_repeat_compiles_nothing(spark, pipeline):
+    """A repeated ``save_outputs()`` finds every generated class it needs
+    in Spark's codegen cache: the session sizes the cache above one
+    pass's working set, so nothing is evicted and recompiled."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    pipeline.save_outputs()
+    before = compiles.getCount()
+    pipeline.save_outputs()
+    assert compiles.getCount() - before == 0

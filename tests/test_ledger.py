@@ -14,6 +14,7 @@ from etl_pipeline_candy_store_spark.operators.ledger import (
     _hadoop_fs,
     commit_run,
     committed_runs,
+    local_frame,
     read_batch_state,
     read_max_applied,
     read_run_state,
@@ -166,3 +167,108 @@ def test_max_applied_stamp_survives_swap_and_recovers(spark, tmp_path):
         "overwrite"
     ).parquet(target + "/_applied")
     assert read_max_applied(spark, fs, jvm, target) == -1
+
+
+def test_local_frame_matches_create_dataframe_schema(spark):
+    """local_frame is a drop-in for spark.createDataFrame(<list>, ddl):
+    same names, types, nullability and rows — built without Python."""
+    for rows, ddl in (
+        ([(5,)], "batch_id long"),
+        ([], "doc_id long"),
+        ([(0, 0.0, "a"), (1, 1e9, None)], "k int, lo double, s string"),
+        ([], "run int, e array<float>"),
+    ):
+        want = spark.createDataFrame(rows, ddl)
+        got = local_frame(spark, rows, ddl)
+        assert got.schema == want.schema, ddl
+        assert got.collect() == want.collect(), ddl
+
+
+def _python_stages(spark, group: str) -> list[int]:
+    """Completed stages of ``group``'s jobs whose RDD graph holds a
+    PythonRDD (i.e. that started Python worker tasks)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+    hits, n_stages = [], 0
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            if str(store.lastStageAttempt(sid).status()) != "COMPLETE":
+                continue
+            n_stages += 1
+            todo = [store.operationGraphForStage(sid).rootCluster()]
+            while todo:
+                cluster = todo.pop()
+                nodes = cluster.childNodes()
+                if any(
+                    "PythonRDD" in nodes.apply(i).name()
+                    for i in range(nodes.size())
+                ):
+                    hits.append(sid)
+                    break
+                kids = cluster.childClusters()
+                todo.extend(kids.apply(i) for i in range(kids.size()))
+    assert n_stages, f"no completed stage in job group {group}"
+    return hits
+
+
+def _write_documents(spark, path: str, n: int = 60) -> None:
+    """A small seeded corpus in the documents-table shape with near
+    copies (another doc's text plus a marker word), so q239 has pairs."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(30)]
+    texts = [" ".join(rng.choices(vocab, k=rng.randint(10, 60))) for _ in range(n)]
+    texts += [texts[i] + " dup" for i in range(0, n, 6)]
+    rows = [(i, t, "en", f"src{i % 20}", len(t)) for i, t in enumerate(texts)]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.parquet(path)
+
+
+def test_winnow_sink_runs_no_python(spark, tmp_path):
+    """The winnow ledger-swap sink's fixed per-batch work (ledger stamp,
+    empty tombstone set, state reads) stays in the JVM: no stage of its
+    micro-batch jobs runs a PythonRDD, and the state still derives
+    exactly the batch q239 pairs."""
+    from etl_pipeline_candy_store_spark.plans.catalog import (
+        REGISTRY,
+        _ensure_loaded,
+        load,
+    )
+    from etl_pipeline_candy_store_spark.streaming.winnow_stream import (
+        read_winnow_pairs,
+        stream_fingerprint_counts,
+    )
+
+    sf, src = str(tmp_path / "sf"), str(tmp_path / "src")
+    target = str(tmp_path / "target")
+    _write_documents(spark, sf + "/documents.parquet")
+    docs = load(spark, sf, "documents")
+    docs.repartition(2).write.parquet(src)
+    q = (
+        stream_fingerprint_counts(
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            target_path=target,
+            checkpoint_path=str(tmp_path / "ckpt"),
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    # two batches (create, then merge); Structured Streaming runs every
+    # micro-batch's jobs under the query's run id as job group
+    assert q.lastProgress["batchId"] == 1
+    assert _python_stages(spark, str(q.runId)) == []
+    _ensure_loaded()
+    want = {
+        tuple(r)
+        for r in REGISTRY["q239_winnow_neardup"].builder(spark, sf).collect()
+    }
+    assert want
+    got = read_winnow_pairs(spark, target, docs).collect()
+    assert {tuple(r) for r in got} == want
